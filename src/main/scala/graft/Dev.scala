@@ -51,24 +51,16 @@ object Dev {
         Adjacency.save(adj, path)
         println(f"[scale] built+saved ${(System.nanoTime() - t0) / 1e9}%.1fs V=${adj.numVertices} E=${adj.numEdges} -> $path")
       case "scaleload" =>
-        // usage: Dev scaleload <path> <iters> <chunk>
+        // usage: Dev scaleload <path> <iters> <parts>
         val path = args.lift(1).getOrElse("target/bench_adj")
         val iters = args.lift(2).map(_.toInt).getOrElse(10)
-        val chunk = args.lift(3).map(_.toInt).getOrElse(5)
-        val parts = args.lift(4).map(_.toInt).getOrElse(64)
+        val parts = args.lift(3).map(_.toInt).getOrElse(64)
         val adj = Adjacency.load(spark, path, numPartitions = parts)
-        if (sys.env.contains("GRAFT_EXPLAIN")) {
-          import org.apache.spark.sql.functions._
-          val st = adj.vertices.select(col("id"), lit(0.5).as("value"))
-          adj.blocks.join(st, adj.blocks("src") === st("id"))
-            .select(explode(col("dsts")).as("id"))
-            .groupBy("id").count().explain("formatted")
-        }
         PageRank.topoFixed(adj, 1) // warm-up (JIT + cache fill)
         val t0 = System.nanoTime()
-        PageRank.runTopo(adj, tol = -1, maxIter = iters, checkEvery = chunk)
+        PageRank.runTopo(adj, tol = -1, maxIter = iters)
         val secs = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] threads=$cpus E=${adj.numEdges} iters=$iters chunk=$chunk " +
+        println(f"[scale] threads=$cpus E=${adj.numEdges} iters=$iters " +
           f"secs=$secs%.1f eps=${iters * adj.numEdges / secs}%.3e")
       case "probe" =>
         import org.apache.spark.sql.functions._

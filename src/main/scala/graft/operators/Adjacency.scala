@@ -22,14 +22,12 @@ import org.apache.spark.storage.StorageLevel
 final case class Adjacency(
     blocks: DataFrame,    // (src, deg, dsts) — persisted, partitioned by src
     vertices: DataFrame,  // (id) — persisted, partitioned by id
-    noInbound: DataFrame, // (id) with in-degree 0 — persisted (static)
     numVertices: Long,
     numEdges: Long) {
 
   def unpersist(): Unit = {
     blocks.unpersist()
     vertices.unpersist()
-    noInbound.unpersist()
   }
 }
 
@@ -37,14 +35,14 @@ object Adjacency {
 
   /** Persist the blocked CSR to disk — the engine's analog of the
     * reference's binary `.gr` file (FileGraph.cpp:202-252): build once,
-    * mmap/load many times. Layout: three parquet dirs under `path`. */
+    * mmap/load many times. Layout: two parquet dirs under `path`. */
   def save(adj: Adjacency, path: String): Unit = {
     adj.blocks.write.mode("overwrite").parquet(s"$path/blocks")
     adj.vertices.write.mode("overwrite").parquet(s"$path/vertices")
-    adj.noInbound.write.mode("overwrite").parquet(s"$path/no_inbound")
   }
 
-  /** Load a saved blocked CSR (re-partitioned/persisted like build). */
+  /** Load a saved blocked CSR (re-partitioned/persisted like build). A
+    * `no_inbound/` dir left by older saves is ignored. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
       numPartitions: Int = 32): Adjacency = {
     val blocks = spark.read.parquet(s"$path/blocks")
@@ -54,11 +52,9 @@ object Adjacency {
     val verts = spark.read.parquet(s"$path/vertices")
       .repartition(numPartitions, col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val noIn = spark.read.parquet(s"$path/no_inbound")
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val nV = verts.count()
     val nE = blocks.agg(sum(size(col("dsts")))).first().getLong(0)
-    Adjacency(blocks, verts, noIn, nV, nE)
+    Adjacency(blocks, verts, nV, nE)
   }
 
   /**
@@ -135,16 +131,8 @@ object Adjacency {
       .repartition(numPartitions, col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // static zero-in-degree set: lets pull-topo PageRank REPLACE its
-    // per-superstep vertices-left-join with a shuffle-free union of
-    // constant base ranks (sums already covers every indeg>0 vertex).
-    val noIn = verts
-      .join(edges.select(col("dst").as("id")).distinct(), Seq("id"),
-        "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
     val nV = verts.count()
     val nE = blocks.agg(sum(size(col("dsts")))).first().getLong(0)
-    Adjacency(blocks, verts, noIn, nV, nE)
+    Adjacency(blocks, verts, nV, nE)
   }
 }

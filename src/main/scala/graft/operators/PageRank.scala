@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.plans.SnapshotStore
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 
 /** One superstep's runtime stats (the reference's -statFile rows). */
@@ -28,28 +27,38 @@ final case class PageRankResult(ranks: DataFrame, iterations: Int,
  *  - dangling vertices: NO mass redistribution — `value/nout` only where
  *    nout > 0, lost mass stays lost (PageRank-pull.cpp:155-156,241)
  *
- * Each superstep is one Catalyst-planned job: state (O(V)) shuffles onto the
- * adjacency's stable src-partitioning, contributions partially aggregate
- * map-side before the single O(E)→O(V) shuffle on dst, and the convergence
- * check is an `agg` action. Every `checkpointEvery` supersteps the state is
- * committed to the SnapshotStore and re-read, truncating lineage and making
- * the run resumable mid-iteration.
+ * A converge-mode superstep is one Catalyst job with one exchange: the
+ * O(V) state joins the blocks on their shared src-partitioning, each
+ * vertex emits its old value beside its contributions, and the single
+ * partially-aggregated O(E)→O(V) shuffle on dst yields both the new and
+ * the old value, so the L1 residual is a `Dataset.observe` on the same
+ * pass. Every `checkpointEvery` supersteps the state is committed to the
+ * SnapshotStore, making the run resumable mid-iteration.
  */
 object PageRank {
 
   val Alpha = 0.85
 
+  /** An observed metric. Null means the aggregate saw no rows, which is
+    * legitimate only when `rows` is 0 (the metric is then `zero`); any
+    * other null or missing metric throws instead of reading as 0 and
+    * ending (or never ending) the loop. */
+  private[graft] def observed[T](obs: Observation, key: String, rows: Long,
+      zero: T): T = obs.get.get(key) match {
+    case Some(v) if v != null => v.asInstanceOf[T]
+    case Some(null) if rows == 0 => zero
+    case v => throw new IllegalStateException(
+      s"observation ${obs.name}: metric $key is $v")
+  }
+
   /** Pull-topological power iteration (PageRank-pull.cpp:201-281).
     *
-    * `checkEvery` > 1 chains that many supersteps LAZILY into one Catalyst
-    * job before materializing and testing the L1 residual — amortizing the
-    * serial per-superstep driver cost (planning, action round-trip,
-    * checkpoint write) that otherwise dominates and caps thread scaling.
-    * The residual is still a true consecutive-superstep L1 (the chunk's
-    * last two states both materialize); the only semantic difference from
-    * the reference's every-iteration check is that the loop can run up to
-    * checkEvery-1 extra supersteps past the crossing point — i.e. it stops
-    * strictly MORE converged, which the 1e-6 allclose gate absorbs. */
+    * With `tol` ≥ 0 every superstep is its own job and tests the L1
+    * residual, so the loop stops at exactly the reference's superstep.
+    * With `tol` < 0 (fixed iterations) there is no stop test, and up to 8
+    * supersteps chain lazily into one job: the serial per-job driver cost
+    * (planning, action round-trip, checkpoint write) is paid once per
+    * chunk, which is what caps thread scaling of short fixed loops. */
   def runTopo(
       adj: Adjacency,
       tol: Double = 1e-6,
@@ -57,38 +66,20 @@ object PageRank {
       alpha: Double = Alpha,
       checkpointEvery: Int = 25,
       store: Option[SnapshotStore] = None,
-      resume: Boolean = false,
-      checkEvery: Int = 1): PageRankResult = {
+      resume: Boolean = false): PageRankResult = {
 
-    // capped eager checkpoint: the fused residual join below multiplies
-    // the checkpoint leaf's inherited size estimate by the state's own —
-    // uncapped, the estimate's bit length doubles per iteration and
-    // Catalyst's stats visitor dies in BigInteger arithmetic by ~30
-    // rounds (see GraftPlanBridge)
-    def ck(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftPlanBridge.checkpointCapped(df)
+    // eager checkpoint that truncates the plan every materialization, its
+    // leaf's size estimate capped: the blocks join multiplies the state's
+    // inherited estimate by the blocks', so uncapped its bit length grows
+    // per superstep until Catalyst's stats visitor dies in BigInteger
+    // arithmetic (see GraftPlanBridge)
+    def ck(df: DataFrame): DataFrame = GraftPlanBridge.checkpointCapped(df)
 
-    // tol < 0 → fixed-iteration mode: skip the L1 join entirely.
+    // tol < 0 → fixed-iteration mode: no residual.
     val trackResidual = tol >= 0
     val n = adj.numVertices
-    val base = (1.0 - alpha) / n
     val metrics = ArrayBuffer.empty[IterMetric]
-
-    // gather: contributions value(u)/nout(u) along out-edges, combined
-    // with map-side partial aggregation before the dst shuffle. The new
-    // value does not depend on the old, so instead of a vertices-left-join
-    // the (static) zero-in-degree vertices are union'd in with the bare
-    // base rank — one shuffle join + one agg per superstep, nothing else.
-    def superstep(st: DataFrame): DataFrame = {
-      val sums = adj.blocks
-        .join(st, adj.blocks("src") === st("id"))
-        .select(explode(col("dsts")).as("id"),
-          (col("value") / col("deg")).as("c"))
-        .groupBy("id").agg(
-          (lit(base) + lit(alpha) * sum(col("c"))).as("value"))
-      sums.unionAll(
-        adj.noInbound.select(col("id"), lit(base).as("value")))
-    }
+    val run = java.util.UUID.randomUUID()
 
     val resumed = if (resume) store.flatMap(_.latest("pagerank_topo")) else None
     var iter = resumed.map(_._1).getOrElse(0)
@@ -99,43 +90,17 @@ object PageRank {
     var converged = false
     while (!converged && iter < maxIter) {
       val t0 = System.nanoTime()
-      // Fixed-iteration mode has no per-superstep stop test, so chain up
-      // to 8 supersteps lazily into ONE Catalyst job (plan depth grows
-      // linearly — the superstep references its input once): the serial
-      // driver cost (planning, action round-trip, checkpoint write) is
-      // paid once per chunk instead of once per superstep, which is the
-      // overhead that caps thread scaling of the short fixed-iteration
-      // bench loops. Residual mode keeps the caller's checkEvery.
-      val chunk = if (trackResidual) checkEvery else math.max(checkEvery, 8)
-      val steps = math.min(chunk, maxIter - iter)
-      // localCheckpoint truncates the logical plan at every
-      // materialization — without it the analyzed plan embeds the
-      // previous state twice (gather + residual joins) and grows 2^k
-      // (OOMs by iteration ~15). Durability across executor loss comes
-      // from the SnapshotStore commits, not this non-reliable checkpoint.
+      val steps = if (trackResidual) 1 else math.min(8, maxIter - iter)
       var l1 = Double.NaN
-      var next: DataFrame = null
       if (trackResidual) {
-        var cur = state
-        for (_ <- 1 until steps) cur = superstep(cur)
-        val penult = if (steps == 1) state else ck(cur)
-        // fold the L1 residual into the materializing pass: the join
-        // against the penultimate state rides the same job and the sum
-        // comes out of Dataset.observe — one action per check instead of
-        // a checkpoint pass plus a separate re-read aggregate.
-        val obs = org.apache.spark.sql.Observation(s"pr_topo_$iter")
-        next = ck(superstep(penult)
-          .join(penult.select(col("id"), col("value").as("prev")), "id")
-          .observe(obs, sum(abs(col("value") - col("prev"))).as("l1"))
-          .select(col("id"), col("value")))
-        l1 = obs.get.get("l1") match {
-          case Some(d: Double) => d
-          case _               => Double.NaN
-        }
+        val obs = Observation(s"pr_topo_${run}_$iter")
+        state = ck(topoStep(adj, state, alpha, Some(obs)))
+        l1 = observed(obs, "l1", n, 0.0)
       } else {
+        // plan depth grows linearly: a superstep references its input once
         var cur = state
-        for (_ <- 1 to steps) cur = superstep(cur)
-        next = ck(cur)
+        for (_ <- 1 to steps) cur = topoStep(adj, cur, alpha, None)
+        state = ck(cur)
       }
 
       iter += steps
@@ -145,12 +110,39 @@ object PageRank {
         adj.numEdges * steps, ms))
       converged = trackResidual && l1 <= tol
 
-      if (store.nonEmpty && (iter % checkpointEvery < steps || converged)) {
-        next = store.get.commitState("pagerank_topo", iter, next)
-      }
-      state = next
+      // the snapshot is for resume; the loop keeps its own co-partitioned
+      // checkpoint rather than the unpartitioned re-read
+      if (store.nonEmpty && (iter % checkpointEvery < steps || converged))
+        store.get.commitState("pagerank_topo", iter, state)
     }
     PageRankResult(state, iter, converged, metrics.toSeq)
+  }
+
+  /** One pull-topo superstep, state (id, value) → (id, value); with `l1`,
+    * the L1 change Σ|value − old value| is observed on the same pass.
+    *
+    * The state left-joins the blocks in a shuffled hash join built on the
+    * state (the hint keeps the O(V) state from being broadcast;
+    * co-partitioned, neither side shuffles). Each joined row posexplodes
+    * its own id at pos 0 (old value, no contribution) ahead of its
+    * out-neighbours (contribution value/nout), so the one groupBy on dst
+    * sums the contributions — a zero-in-degree vertex sums only its self
+    * row and gets exactly base — and the max over pos-0 values recovers
+    * the old value, one self row per hub tile. */
+  private[graft] def topoStep(adj: Adjacency, st: DataFrame, alpha: Double,
+      l1: Option[Observation]): DataFrame = {
+    val next = st.hint("SHUFFLE_HASH")
+      .join(adj.blocks, col("id") === col("src"), "left")
+      .select(col("value"), col("deg"), posexplode(concat(array(col("id")),
+        coalesce(col("dsts"), typedLit(Array.empty[Long]))))
+        .as(Seq("pos", "dst")))
+      .groupBy(col("dst").as("id"))
+      .agg((lit((1.0 - alpha) / adj.numVertices) + lit(alpha) *
+          sum(when(col("pos") > 0, col("value") / col("deg")).otherwise(0.0)))
+          .as("value"),
+        max(when(col("pos") === 0, col("value"))).as("prev"))
+    l1.fold(next)(next.observe(_, sum(abs(col("value") - col("prev"))).as("l1")))
+      .select(col("id"), col("value"))
   }
 
   /** Exactly `k` pull-topo iterations, no convergence check — the
@@ -285,6 +277,7 @@ object PageRank {
     var nextAccum = state.filter(col("residual") > tol && col("deg") > 0)
       .count()
     var converged = false
+    val run = java.util.UUID.randomUUID()
 
     while (!converged && iter < maxIter) {
       val thisAccum = nextAccum
@@ -297,7 +290,7 @@ object PageRank {
         .groupBy("id").agg(sum(col("d")).as("dsum"))
 
       val active = col("residual") > tol
-      val obs = org.apache.spark.sql.Observation(s"pr_res_$iter")
+      val obs = Observation(s"pr_res_${run}_$iter")
       var next = state
         .join(deltas, Seq("id"), "left")
         .select(
@@ -313,9 +306,8 @@ object PageRank {
           sum(col("residual")).as("res_l1"))
         .localCheckpoint(true)
 
-      val m = obs.get
-      nextAccum = m.get("accum") match { case Some(l: Long) => l; case _ => 0L }
-      val l1 = m.get("res_l1") match { case Some(d: Double) => d; case _ => 0.0 }
+      nextAccum = observed(obs, "accum", adj.numVertices, 0L)
+      val l1 = observed(obs, "res_l1", adj.numVertices, 0.0)
       iter += 1
       val ms = (System.nanoTime() - t0) / 1000000
       metrics += IterMetric(iter, l1, adj.numEdges, ms)

@@ -1,9 +1,11 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
-import java.util.Comparator
+import scala.util.Using
 
 /**
  * Iceberg-style snapshot layer over Parquet — the Spark-native replacement
@@ -13,7 +15,8 @@ import java.util.Comparator
  * Layout under `root/`:
  *   data/<algo>/step=<n>/           Parquet vertex-state snapshot
  *   snapshots/<algo>-<n>.json       manifest: superstep, path, per-partition
- *                                   lineage (rows per partition), stats
+ *                                   lineage (rows per written part file,
+ *                                   from its Parquet footer)
  *   metrics/metrics.jsonl           one line per superstep (residual,
  *                                   edges processed, millis, edges/sec)
  *
@@ -34,21 +37,29 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
     s"$root/data/$algo/step=$step"
 
   /**
-   * Checkpoint a vertex-state DataFrame at `step`; returns the re-read
-   * DataFrame (which truncates the iterative plan's lineage — the known
-   * iterative-DataFrame pitfall, SURVEY.md §4).
+   * Commit a vertex-state DataFrame at `step` with one write job. The
+   * manifest's per-partition lineage is one entry per written part file
+   * (the writing task's partition, its rows), read from the Parquet
+   * footers on the driver rather than by a second job over the re-read
+   * snapshot. Returns the snapshot re-read with `state`'s schema, which
+   * truncates the iterative plan's lineage (the known iterative-DataFrame
+   * pitfall, SURVEY.md §4); a caller whose state is already a checkpoint
+   * can keep that instead and ignore the re-read.
    */
   def commitState(algo: String, step: Int, state: DataFrame): DataFrame = {
     val path = dataPath(algo, step)
     state.write.mode("overwrite").parquet(path)
 
-    // Per-partition lineage demanded by the north rule: rows per physical
-    // partition of the snapshot as written.
-    val reread = spark.read.parquet(path)
-    val partRows = reread
-      .groupBy(spark_partition_id().as("p")).agg(count(lit(1)).as("rows"))
-      .collect().map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-      .mkString("[", ",", "]")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val partRows = dir.getFileSystem(conf).listStatus(dir)
+      .filter(_.getPath.getName.startsWith("part-")).sortBy(_.getPath.getName)
+      .map { f =>
+        val name = f.getPath.getName
+        val rows = Using.resource(ParquetFileReader.open(
+          HadoopInputFile.fromStatus(f, conf)))(_.getRecordCount)
+        s"""{"partition":${name.split("-")(1).toInt},"file":"$name","rows":$rows}"""
+      }.mkString("[", ",", "]")
 
     val manifest =
       s"""{"algo":"$algo","superstep":$step,"path":"$path","committed_at_ms":${System.currentTimeMillis()},"partition_lineage":$partRows}"""
@@ -56,7 +67,7 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
     Files.writeString(tmp, manifest)
     Files.move(tmp, snapDir.resolve(f"$algo-$step%09d.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    reread
+    spark.read.schema(state.schema).parquet(path)
   }
 
   /** Latest committed snapshot for `algo`, if any — the resume point. */

@@ -628,6 +628,8 @@ class GraphAlgoSpec extends AnyFunSuite {
       .toDF("src", "dst", "w")
     val adj = Adjacency.buildWeighted(we)
     Adjacency.save(adj, "target/wadj-spec")
+    // older saves also wrote a no_inbound/ dir; load ignores it
+    adj.vertices.write.mode("overwrite").parquet("target/wadj-spec/no_inbound")
     val back = Adjacency.load(spark, "target/wadj-spec")
     val distA = labelMap(Sssp.weightedFixedRounds(adj, 1L, 4))
     val distB = labelMap(Sssp.weightedFixedRounds(back, 1L, 4))

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{GraphOps, PageRank}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,6 +86,54 @@ class PageRankSpec extends AnyFunSuite {
     val maxDiff = ra.map { case (id, v) => math.abs(v - rb(id)) }.max
     assert(maxDiff <= 1e-12, s"partitioning changed results by $maxDiff")
     a.unpersist(); b.unpersist()
+  }
+
+  test("converge superstep: one exchange, no broadcast, no join side shuffled") {
+    // adjacency partitions = shuffle partitions and AQE off, as the
+    // benchmark runs it: the checkpointed state then stays co-partitioned
+    // with the blocks from superstep to superstep
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val adj = graft.operators.Adjacency.build(web.edges, blockSize = 64,
+      numPartitions = parts, explicitVertices = Some(web.dict.select(col("id"))))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val init = adj.vertices.select(col("id"),
+        lit(1.0 / adj.numVertices).as("value")).localCheckpoint(true)
+      val state = org.apache.spark.sql.GraftPlanBridge.checkpointCapped(
+        PageRank.topoStep(adj, init, PageRank.Alpha, None))
+      for (st <- Seq(init, state)) {
+        val step = PageRank.topoStep(adj, st, PageRank.Alpha,
+          Some(org.apache.spark.sql.Observation()))
+        val plan = step.queryExecution.executedPlan
+        val exchanges = plan.collect { case e: Exchange => e }
+        assert(!exchanges.exists(_.isInstanceOf[BroadcastExchangeExec]), plan)
+        // the one exchange is the contributions' shuffle on dst: neither
+        // the state nor the cached blocks side of the join is shuffled
+        val keys = exchanges.map(_.outputPartitioning).collect {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        }
+        assert(keys == Seq(Seq("dst")), plan)
+        step.collect()
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      adj.unpersist()
+    }
+  }
+
+  test("observed metrics: missing or unexpected null throws, never reads as 0") {
+    import org.apache.spark.sql.Observation
+    val obs = Observation()
+    df(Seq((1L, 2L))).observe(obs, sum(col("src")).as("s")).collect()
+    assert(PageRank.observed(obs, "s", 1L, 0L) == 1L)
+    intercept[IllegalStateException](PageRank.observed(obs, "accum", 1L, 0L))
+    // sum over no rows is null: 0 only when no rows were expected
+    val empty = Observation()
+    df(Seq((1L, 2L))).filter(lit(false))
+      .observe(empty, sum(col("src")).as("s")).collect()
+    assert(PageRank.observed(empty, "s", 0L, 0L) == 0L)
+    intercept[IllegalStateException](PageRank.observed(empty, "s", 5L, 0L))
   }
 
   test("sanity aggregates") {

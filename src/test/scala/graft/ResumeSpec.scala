@@ -4,6 +4,7 @@ import graft.operators.{ConnectedComponents, PageRank}
 import graft.plans.SnapshotStore
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Checkpoint/resume semantics (north rule: resumable mid-iteration). */
 class ResumeSpec extends AnyFunSuite {
@@ -18,6 +19,15 @@ class ResumeSpec extends AnyFunSuite {
     val full = PageRank.runTopo(web.adjacency, tol = 1e-6,
       checkpointEvery = 10, store = Some(storeA))
     assert(full.converged)
+    // lineage: one entry per written part file, rows summing to |V|
+    val lineage = """"rows":(\d+)""".r.findAllMatchIn(Files.readString(
+      java.nio.file.Paths.get(storeA.root, "snapshots",
+        "pagerank_topo-000000010.json"))).map(_.group(1).toLong).toSeq
+    val parts = Files.list(java.nio.file.Paths.get(storeA.root, "data",
+      "pagerank_topo", "step=10")).iterator().asScala
+      .count(_.getFileName.toString.startsWith("part-"))
+    assert(lineage.size == parts && parts > 0)
+    assert(lineage.sum == web.adjacency.numVertices)
 
     val storeB = new SnapshotStore(tmp(), spark)
     // interrupted run: dies at superstep 14 (last commit at 10)
